@@ -79,11 +79,17 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
 
   /** Seed the memo with rows this instance just wrote (refresh paths —
     * the rows are already driver-side, so the next reader pays nothing).
+    * `writtenFp` is the listing [[rewriteInPlace]] fingerprinted under
+    * the table monitor right after its swap; it is re-fingerprinted
+    * before the put, as [[loadManifest]] does after its read, so a swap
+    * racing the seed can never pin these rows under a newer fingerprint.
     */
-  private def seedManifestMemo(statsTbl: String, rows: Seq[StatRow]): Unit = {
-    manifestMemo.put(statsTbl, (manifestFingerprint(statsTbl), rows))
-    ()
-  }
+  private def seedManifestMemo(statsTbl: String, writtenFp: Seq[(String, Long, Long)],
+      rows: Seq[StatRow]): Unit =
+    if (writtenFp.nonEmpty && manifestFingerprint(statsTbl) == writtenFp) {
+      manifestMemo.put(statsTbl, (writtenFp, rows))
+      ()
+    }
 
   /** Fingerprint-validated READ-SCHEMA memo (r16): resolving a parquet
     * table runs footer inference per `spark.read` call — on a
@@ -102,12 +108,6 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]()
 
-  /** Seed after a write. A REPLACEMENT's read-back schema is the
-    * written one (nullable); an APPEND's only when the pre-write table
-    * was absent, or the memo was valid for the pre-write listing and
-    * the appended schema matches it (mixed-schema or externally-touched
-    * tables invalidate toward fresh inference).
-    */
   /** The file-source read-back rule ("all columns are automatically
     * converted to be nullable") — `DataType.asNullable` is
     * private[spark], so mirror its recursion.
@@ -126,17 +126,25 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     case other => other
   }
 
+  /** Seed after a write. A REPLACEMENT's read-back schema is the
+    * written one (nullable); an APPEND's only when the pre-write table
+    * was absent, or the memo was valid for the pre-write listing and
+    * the appended schema matches it (mixed-schema or externally-touched
+    * tables invalidate toward fresh inference). Returns the post-write
+    * fingerprint the entry is keyed by.
+    */
   private def seedSchemaMemo(table: String,
       written: org.apache.spark.sql.types.StructType, replaced: Boolean,
-      preFp: Seq[(String, Long, Long)] = Seq.empty): Unit = {
+      preFp: Seq[(String, Long, Long)] = Seq.empty): Seq[(String, Long, Long)] = {
     val expected = allNullable(written)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val prev = schemaMemo.get(table)
     val safe = replaced || preFp.isEmpty ||
       (prev != null && prev._1 == preFp && prev._2 == expected)
-    if (safe) schemaMemo.put(table, (manifestFingerprint(table), expected))
+    val fp = manifestFingerprint(table)
+    if (safe) schemaMemo.put(table, (fp, expected))
     else schemaMemo.remove(table)
-    ()
+    fp
   }
 
   /** Complete a swap torn by a crash between AtomicSwap's two renames
@@ -196,11 +204,13 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     val preFp = manifestFingerprint(table)
     df.write.mode(SaveMode.Append).format(format).save(path(table))
     seedSchemaMemo(table, df.schema, replaced = false, preFp)
+    ()
   }
 
   def overwrite(df: DataFrame, table: String): Unit = {
     df.write.mode(SaveMode.Overwrite).format(format).save(path(table))
     seedSchemaMemo(table, df.schema, replaced = true)
+    ()
   }
 
   /** CRASH-SAFE full replacement — [[overwrite]] is delete-then-write
@@ -212,8 +222,10 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     * overwrites its own input). Use for state a restart must be able
     * to trust — e.g. the streaming bloom bitmap (r12 review).
     */
-  def replace(table: String, contents: DataFrame): Unit =
+  def replace(table: String, contents: DataFrame): Unit = {
     rewriteInPlace(table, contents)
+    ()
+  }
 
   /** Delete-by-predicate (the idempotent-ingest rollback,
     * `CommandExecuter.cs:1130-1157` `DELETE … WHERE Dateiname='f'`):
@@ -515,9 +527,9 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     // manifest exists to remove from query planning
     val rows = graft.operators.ZOrder.fileEnvelopesAll(spark, path(table), cols)
     import spark.implicits._
-    replace(statsTable(table),
+    val fp = rewriteInPlace(statsTable(table),
       rows.toDF("file", "colname", "rows", "vmin", "vmax").coalesce(1))
-    seedManifestMemo(statsTable(table), rows)
+    seedManifestMemo(statsTable(table), fp, rows)
     rows.size
   }
 
@@ -572,9 +584,9 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
       .map(f => (f, NoEnvelopes, 0L, 0L, 0L))
     import spark.implicits._
     val merged = (kept ++ added ++ sentinels).sortBy(r => (r._1, r._2))
-    replace(statsTable(table),
+    val fp = rewriteInPlace(statsTable(table),
       merged.toDF("file", "colname", "rows", "vmin", "vmax").coalesce(1))
-    seedManifestMemo(statsTable(table), merged)
+    seedManifestMemo(statsTable(table), fp, merged)
     (kept.size, added.size + sentinels.size, manifest.size - kept.size)
   }
 
@@ -823,17 +835,21 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     * old data is renamed aside BEFORE the new copy moves into place, so
     * a crash at any point leaves either the old or the new copy
     * recoverable (never a window where the table is only in a dir
-    * `read()` ignores).
+    * `read()` ignores). Returns the fingerprint of the listing the swap
+    * left in place.
     */
-  private def rewriteInPlace(table: String, contents: org.apache.spark.sql.DataFrame): Unit = {
+  private def rewriteInPlace(table: String,
+      contents: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] =
     // under the table monitor so recoverIfTorn can never slide a dir
     // beneath the swap's rename pair (ADVICE r10); same-table rewrites
-    // serialize, which they already required for correctness
+    // serialize, which they already required for correctness. The
+    // schema memo is seeded (and the listing fingerprinted) inside the
+    // same monitor, so no other rewrite of this instance can swap in
+    // between and have the written schema pinned to its files.
     monitor(table).synchronized {
       graft.util.AtomicSwap.swapInto(path(table), "__rewrite") { tmp =>
         contents.write.mode(SaveMode.Overwrite).format(format).save(tmp)
       }
+      seedSchemaMemo(table, contents.schema, replaced = true)
     }
-    seedSchemaMemo(table, contents.schema, replaced = true)
-  }
 }

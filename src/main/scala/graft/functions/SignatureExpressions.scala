@@ -360,7 +360,9 @@ case class SpanStarts(child: Expression, n: Int) extends UnaryExpression {
   *
   * PRECONDITION: cuts sorted ascending by cut_start (the operator sorts
   * via array_sort; gaps-and-islands additionally makes them disjoint —
-  * the walk stays correct under overlap, the spec pins both). Parity
+  * the walk stays correct under overlap, the spec pins both). The
+  * kernel checks it itself while it reads the cut starts and raises on
+  * unsorted cuts instead of returning wrong rows. Parity
   * (asserted in SignatureExpressionsSpec): NULL cuts array passes `t`
   * through verbatim; NULL `t` is NULL; NULL tokens at uncovered
   * positions survive (filter's lambda sees them, the position test
@@ -643,7 +645,10 @@ object SignatureKernels {
 
   /** One merged pointer walk over tokens and sorted cut intervals;
     * composed-form parity and the sorted-by-start precondition
-    * documented on [[ExciseByIntervals]].
+    * documented on [[ExciseByIntervals]]. The precondition is checked
+    * in one pass over the cut starts: the walk only ever looks at the
+    * cut under its pointer, so an out-of-order cut behind a later start
+    * would silently keep tokens it covers.
     */
   def exciseByIntervals(toks: ArrayData, cuts: ArrayData,
       startIsLong: Boolean, endIsLong: Boolean): ArrayData = {
@@ -653,6 +658,18 @@ object SignatureKernels {
       if (startIsLong) r.getLong(0) else r.getInt(0).toLong
     def endOf(r: InternalRow): Long =
       if (endIsLong) r.getLong(1) else r.getInt(1).toLong
+    var prevStart = Long.MinValue
+    var c = 0
+    while (c < nc) {
+      if (!cuts.isNullAt(c)) {
+        val s = startOf(cuts.getStruct(c, 2))
+        if (s < prevStart) throw new IllegalArgumentException(
+          s"graft_excise: cuts must be sorted ascending by cut_start, " +
+            s"but cut ${c + 1} starts at $s after a cut starting at $prevStart")
+        prevStart = s
+      }
+      c += 1
+    }
     val out = new Array[AnyRef](m)
     var k = 0
     var j = 0

@@ -216,9 +216,10 @@ case class SquaredL2(left: Expression, right: Expression)
   * index reads from the end exactly like `element_at`; an out-of-range
   * index throws under ANSI (`failOnError`, captured at construction
   * like ElementAt) and yields NULL otherwise; index 0 throws; a code
-  * whose +1 exceeds int range throws under ANSI like the composed
-  * `(c+1).cast("int")` and wraps like the non-ANSI cast otherwise
-  * (ADVICE r15 — unreachable for real PQ codes ≤ 255).
+  * whose +1 exceeds int range throws Spark's `CAST_OVERFLOW` error under
+  * ANSI like the composed `(c+1).cast("int")` and wraps like the
+  * non-ANSI cast otherwise (ADVICE r15 — unreachable for real PQ codes
+  * ≤ 255).
   */
 case class AdcFold(left: Expression, right: Expression,
     failOnError: Boolean =
@@ -261,8 +262,7 @@ case class AdcFold(left: Expression, right: Expression,
         // overflow where .toInt silently wraps (ADVICE r15) — match it;
         // non-ANSI cast wraps exactly like .toInt, so only ANSI changes
         if (failOnError && (raw > Int.MaxValue || raw < Int.MinValue))
-          throw new ArithmeticException(
-            s"Casting $raw to int causes overflow")
+          throw org.apache.spark.sql.graftshim.ErrorBridge.longToIntOverflow(raw)
         val idx = raw.toInt
         if (idx == 0) throw new IllegalArgumentException(
           "element_at: SQL array indices start at 1")
@@ -310,7 +310,7 @@ case class AdcFold(left: Expression, right: Expression,
          |    org.apache.spark.sql.catalyst.util.ArrayData $inner = $t.getArray($i);
          |    final long $raw = $c.getLong($i) + 1L;
          |    if ($failOnError && ($raw > Integer.MAX_VALUE || $raw < Integer.MIN_VALUE)) {
-         |      throw new ArithmeticException("Casting " + $raw + " to int causes overflow");
+         |      throw org.apache.spark.sql.graftshim.ErrorBridge.longToIntOverflow($raw);
          |    }
          |    final int $idx = (int) $raw;
          |    if ($idx == 0) {

@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -18,10 +17,12 @@ import graft.model._
   * Spark-native re-expression of `Helper.cs:2312-2672`: instead of
   * UPDATE-in-place + Json_Log regeneration per change, the ledger is an
   * append-only event store (every change appends the full row with a
-  * bumped `seq`); [[latest]] reduces to current state with one window,
-  * and `Json_Log` is `to_json(struct(*))` computed in the view — at
-  * 100 TB that is an append-only parquet/Delta table partitioned by day
-  * + a compacted latest view, never a driver-side row update.
+  * bumped `seq`) beside a maintained current-state view (one row per
+  * run id, replaced under the same lock as every append); [[latest]]
+  * serves that view, and `Json_Log` is `to_json(struct(*))` computed
+  * over it — at 100 TB that is an append-only parquet/Delta table
+  * partitioned by day + a compacted latest view, never a driver-side
+  * row update.
   *
   * Id assignment and event buffering are driver-side (the control plane
   * is tiny relative to the data plane — the reference runs it through a
@@ -199,15 +200,19 @@ final class RunLedger(clock: () => LocalDateTime = () => LocalDateTime.now()) {
   }
 
   /** Current state per run id with the reference's `Json_Log`
-    * denormalization: latest seq wins, `Json_Log = to_json(struct(*))`
-    * over the business columns (`Helper.cs:2616-2670`).
+    * denormalization (`Helper.cs:2616-2670`): the maintained
+    * current-state rows — the same rows the reference's in-place UPDATE
+    * leaves behind, and exactly what "latest seq per id" over
+    * [[eventsDf]] reduces to — with `Json_Log = to_json(struct(*))` over
+    * the business columns. The frame is a local relation sized by the
+    * number of runs, not by the event history, so Catalyst folds report
+    * projections over it on the driver (`ConvertToLocalRelation`) and a
+    * monitoring read such as `Reports.timeline(latest).collect()` runs
+    * no Spark job.
     */
   def latest(spark: SparkSession): DataFrame = {
-    val w = Window.partitionBy(col("id")).orderBy(col("seq").desc)
-    val base = eventsDf(spark)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
+    import spark.implicits._
+    val base = current.toDF()
     base.withColumn("json_log", to_json(struct(base.columns.map(col): _*)))
   }
 

@@ -688,7 +688,7 @@ object Pipeline {
       // source-sized state layout at stream birth (r16) — see q54
       val s2 = graft.streaming.Streams.statefulSession(s,
         graft.streaming.Streams.derivedStatePartitions(s,
-          new java.io.File(s"$dir/documents.parquet").length()))
+          graft.streaming.Streams.dirBytes(s"$dir/documents.parquet")))
       import s2.implicits._
       val schema = s2.read.parquet(s"$dir/documents.parquet").schema
       // the stream source wants a DIRECTORY; the sf dir + a glob filter
@@ -800,7 +800,7 @@ object Pipeline {
       // see Streams.derivedStatePartitions for the scale argument
       val s2 = graft.streaming.Streams.statefulSession(s,
         graft.streaming.Streams.derivedStatePartitions(s,
-          new java.io.File(s"$dir/events.parquet").length()))
+          graft.streaming.Streams.dirBytes(s"$dir/events.parquet")))
       val stream = Tables.eventsStream(s2, dir)
       val q = graft.streaming.Streams.windowedCounts(stream)
         .writeStream.format("parquet")
@@ -850,7 +850,7 @@ object Pipeline {
       // source-sized state layout at stream birth (r16) — see q54
       val s2 = graft.streaming.Streams.statefulSession(s,
         graft.streaming.Streams.derivedStatePartitions(s,
-          new java.io.File(s"$dir/events.parquet").length()))
+          graft.streaming.Streams.dirBytes(s"$dir/events.parquet")))
       import s2.implicits._
       val stream = Tables.eventsStream(s2, dir)
         .select($"user_id", $"ts", $"event_type", $"value")
@@ -923,7 +923,7 @@ object Pipeline {
       // bound matters even more than for the HDFS-backed twin
       val s2 = graft.streaming.Streams.rocksDbSession(s,
         statePartitions = Some(graft.streaming.Streams.derivedStatePartitions(s,
-          new java.io.File(s"$dir/events.parquet").length())))
+          graft.streaming.Streams.dirBytes(s"$dir/events.parquet"))))
       require(graft.streaming.Streams.stateV2Ready(s2),
         "state-v2 gate needs Spark 4+ with the RocksDB state store provider")
       import s2.implicits._

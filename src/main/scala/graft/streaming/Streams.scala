@@ -742,25 +742,38 @@ object Streams {
     * `statePartitions = |codebook|` fix, generalized to user-keyed
     * state where no cardinality bound exists but the source size is
     * known. NOT a core-count tune: the cap scales with the session's
-    * own shuffle setting, the numerator with the data.
+    * own shuffle setting, the numerator with the data. A negative
+    * `sourceBytes` means the size is unknown ([[dirBytes]] could not
+    * list the source): the bound is then the session default, never the
+    * floor of 1 that an empty source gets.
     */
   def derivedStatePartitions(spark: SparkSession, sourceBytes: Long): Int = {
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1, math.min(cap.toLong,
+    if (sourceBytes < 0) math.max(1, cap)
+    else math.max(1, math.min(cap.toLong,
       (sourceBytes + math.max(1L, advisory) - 1) / math.max(1L, advisory)).toInt)
   }
 
-  /** Total bytes under a watched-folder source (driver-side listing —
-    * the same listing the file source itself performs per trigger). */
+  /** Total bytes under a source path — a single file or a folder tree
+    * (driver-side listing, the same listing the file source itself
+    * performs per trigger). A missing path is 0 bytes; a folder whose
+    * listing fails (`listFiles()` returns null on an I/O or permission
+    * error) makes the whole size unknown, reported as -1, which
+    * [[derivedStatePartitions]] sizes to the session default.
+    */
   def dirBytes(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) f.listFiles().map(walk).sum
-      else f.length()
     val root = new java.io.File(dir)
-    if (root.exists()) walk(root) else 0L
+    if (root.exists()) treeBytes(root) else 0L
   }
+
+  private[streaming] def treeBytes(f: java.io.File): Long =
+    if (!f.isDirectory) f.length()
+    else Option(f.listFiles()).fold(-1L) { children =>
+      val sizes = children.map(treeBytes)
+      if (sizes.exists(_ < 0)) -1L else sizes.sum
+    }
 
   /** A session clone for HDFS-backed stateful streams with the state
     * layout sized at stream birth ([[derivedStatePartitions]]) — the

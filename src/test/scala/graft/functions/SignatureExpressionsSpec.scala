@@ -214,6 +214,39 @@ class SignatureExpressionsSpec extends AnyFunSuite with SparkSupport with PropSu
     assert(nl.isNullAt(0) && nl.isNullAt(1))
   }
 
+  test("exciseByIntervals: unsorted cuts raise instead of returning wrong rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    def excise(df: org.apache.spark.sql.DataFrame) = df.select(
+      ColumnBridge.column(ExciseByIntervals(
+        ColumnBridge.expression($"t"), ColumnBridge.expression($"cuts"))))
+    def causes(e: Throwable): Seq[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    def assertRejected(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("sorted ascending by cut_start")), e.toString)
+    }
+    // (5,6) before (1,2): the pointer walk alone would keep tokens 1-2
+    val unsorted = Seq((Seq.tabulate(10)(i => s"w$i"), Seq((5, 6), (1, 2))))
+      .toDF("t", "rawCuts")
+      .selectExpr("t", "transform(rawCuts, c -> struct(c._1 as cut_start, c._2 as cut_end)) as cuts")
+    // interpreted (the local relation folds on the driver) and codegen
+    // (cuts computed per row from range data)
+    assertRejected(excise(unsorted).collect())
+    val generated = spark.range(1).selectExpr(
+      "transform(sequence(1, 10), i -> concat('w', cast(i + id as string))) as t",
+      "array(struct(cast(5 + id as int) as cut_start, 6 as cut_end), " +
+        "struct(cast(1 + id as int) as cut_start, 2 as cut_end)) as cuts")
+    assertRejected(excise(generated).collect())
+    // equal starts and NULL cut elements are not out of order
+    val tied = spark.range(1).selectExpr(
+      "transform(sequence(1, 6), i -> concat('w', cast(i + id as string))) as t",
+      "array(struct(cast(2 + id as int) as cut_start, 2 as cut_end), null, " +
+        "struct(cast(2 + id as int) as cut_start, 3 as cut_end)) as cuts")
+    assert(excise(tied).head().getSeq[String](0) == Seq("w1", "w4", "w5", "w6"))
+  }
+
   test("codegen smoke: kernels execute inside a filtered projection over range data") {
     import spark.implicits._
     val df = spark.range(1, 200).select(

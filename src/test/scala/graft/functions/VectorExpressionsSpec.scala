@@ -168,6 +168,29 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
       oob.select(PqIndex.adcScore($"table", $"codes")).collect())
   }
 
+  test("AdcFold: an ANSI code overflow throws Spark's CAST_OVERFLOW like the composed cast") {
+    import ext.implicits._
+    import graft.operators.PqIndex
+    def condition(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+        case s: org.apache.spark.SparkThrowable if s.getCondition != null => s.getCondition
+      }.getOrElse(fail(s"no Spark error condition in $e"))
+    }
+    // a code of Int.MaxValue overflows (c+1)::int; interpreted over the
+    // local relation, codegen over range data
+    val local = Seq((Seq(Seq(1.0, 2.0)), Seq(Int.MaxValue.toLong))).toDF("table", "codes")
+    val generated = ext.range(1).select(
+      array(array(lit(1.0), lit(2.0))).as("table"),
+      array($"id" + lit(Int.MaxValue.toLong)).as("codes"))
+    for (df <- Seq(local, generated)) {
+      assert(condition(df.select(PqIndex.composedAdcScore($"table", $"codes")).collect()) ==
+        "CAST_OVERFLOW")
+      assert(condition(df.select(PqIndex.adcScore($"table", $"codes")).collect()) ==
+        "CAST_OVERFLOW")
+    }
+  }
+
   test("newSession() drops experimental.extraOptimizations (the rocksDbSession re-register rationale)") {
     // Sessions register the rewrites via experimental.extraOptimizations;
     // a plain newSession() builds a FRESH SessionState with no parent, so

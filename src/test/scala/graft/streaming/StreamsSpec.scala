@@ -330,6 +330,37 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
     assert(spark.conf.get("spark.sql.shuffle.partitions").toInt == cap)
   }
 
+  test("dirBytes: a readable empty folder is 0 bytes and keeps the floor of 1") {
+    val empty = tmpDir("dirbytes-empty")
+    assert(Streams.dirBytes(empty) == 0L)
+    assert(Streams.derivedStatePartitions(spark, Streams.dirBytes(empty)) == 1)
+    // a folder tree sums its files, like a multi-file table
+    val tree = tmpDir("dirbytes-tree")
+    java.nio.file.Files.write(java.nio.file.Paths.get(tree, "a.parquet"), Array.fill[Byte](10)(1))
+    new java.io.File(tree, "sub").mkdir()
+    java.nio.file.Files.write(java.nio.file.Paths.get(tree, "sub", "b.parquet"), Array.fill[Byte](5)(1))
+    assert(Streams.dirBytes(tree) == 15L)
+  }
+
+  test("dirBytes: an unreadable listing is unknown size and sizes to the session default") {
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val root = tmpDir("dirbytes-unreadable")
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "a.parquet"), Array.fill[Byte](10)(1))
+    // listFiles() returns null on an I/O or permission error; a root
+    // process reads through chmod 000, so stand the failure in directly
+    val unreadable = new java.io.File(root, "sub") {
+      override def isDirectory: Boolean = true
+      override def listFiles(): Array[java.io.File] = null
+    }
+    assert(Streams.treeBytes(unreadable) == -1L)
+    val parent = new java.io.File(root) {
+      override def listFiles(): Array[java.io.File] =
+        Array(new java.io.File(root, "a.parquet"), unreadable)
+    }
+    assert(Streams.treeBytes(parent) == -1L, "one unreadable subtree makes the whole size unknown")
+    assert(Streams.derivedStatePartitions(spark, Streams.treeBytes(parent)) == cap)
+  }
+
   test("windowedCounts: watermark closes windows, counts per type") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
